@@ -550,8 +550,14 @@ def main(argv: list[str] | None = None) -> int:
             df = table.read(spark)
         df.orderBy("conv_id", "turn_idx").show(args.limit, truncate=60)
     elif args.cmd == "lookup":
-        plan = table.plan_point_lookup(spark, args.conv)
-        rows = table.point_read(spark, args.conv).orderBy("turn_idx").collect()
+        # one snapshot for the plan AND the rows
+        m = table.manifest()
+        plan = table.plan_point_lookup(spark, args.conv, m=m)
+        rows = (
+            table.point_read(spark, args.conv, version=m.version)
+            .orderBy("turn_idx")
+            .collect()
+        )
         print(json.dumps({
             "conv_id": args.conv,
             "bucket": plan["bucket"],

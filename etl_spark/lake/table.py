@@ -588,6 +588,54 @@ class LakeTable:
         n = self.n_buckets if n_buckets is None else n_buckets
         return F.pmod(F.xxhash64(F.col(conv_col)), F.lit(n)).cast("int")
 
+    @staticmethod
+    def _xxh64(data: bytes) -> int:
+        """XXH64 of ``data`` exactly as Spark's ``xxhash64`` hashes a string
+        column (its UTF-8 bytes, seed 42, returned as a signed 64-bit int),
+        so the driver can evaluate ``bucket_expr`` for one key without a
+        job. Words are read little-endian, as Spark reads them on every
+        platform."""
+        M = 0xFFFFFFFFFFFFFFFF
+        P1, P2, P3 = 0x9E3779B185EBCA87, 0xC2B2AE3D27D4EB4F, 0x165667B19E3779F9
+        P4, P5 = 0x85EBCA77C2B2AE63, 0x27D4EB2F165667C5
+        seed = 42
+
+        def rotl(x: int, r: int) -> int:
+            return ((x << r) | (x >> (64 - r))) & M
+
+        def rnd(acc: int, lane: int) -> int:
+            return rotl((acc + lane * P2) & M, 31) * P1 & M
+
+        def u64(i: int) -> int:
+            return int.from_bytes(data[i:i + 8], "little")
+
+        n, i = len(data), 0
+        if n >= 32:
+            v = [(seed + P1 + P2) & M, seed + P2, seed, (seed - P1) & M]
+            while i + 32 <= n:
+                for j in range(4):
+                    v[j] = rnd(v[j], u64(i))
+                    i += 8
+            h = (rotl(v[0], 1) + rotl(v[1], 7) + rotl(v[2], 12) + rotl(v[3], 18)) & M
+            for x in v:
+                h = ((h ^ rnd(0, x)) * P1 + P4) & M
+        else:
+            h = seed + P5
+        h = (h + n) & M
+        while i + 8 <= n:
+            h = (rotl(h ^ rnd(0, u64(i)), 27) * P1 + P4) & M
+            i += 8
+        if i + 4 <= n:
+            h ^= int.from_bytes(data[i:i + 4], "little") * P1 & M
+            h = (rotl(h, 23) * P2 + P3) & M
+            i += 4
+        for b in data[i:]:
+            h = rotl(h ^ (b * P5 & M), 11) * P1 & M
+        h = (h ^ (h >> 33)) * P2 & M
+        h = (h ^ (h >> 29)) * P3 & M
+        h ^= h >> 32
+        return h - (1 << 64) if h >> 63 else h
+
     # ---------------------------------------------------------------- reads
     def _aligned_scan(
         self,
@@ -665,13 +713,14 @@ class LakeTable:
                 cols.append(F.lit(flag).alias(tag[0]))
             parts.append(df.select(*cols))
         if not parts:
-            out_schema = cur_storage
+            # parquet scans read every column nullable: declare the empty
+            # scan the same way, so its schema does not depend on pruning
+            fields = [T.StructField(f.name, f.dataType) for f in cur_storage.fields]
             if tag is not None:
-                out_schema = T.StructType(
-                    list(cur_storage.fields)
-                    + [T.StructField(tag[0], T.BooleanType(), False)]
-                )
-            return spark.createDataFrame([], out_schema)
+                fields.append(T.StructField(tag[0], T.BooleanType(), False))
+            return spark.createDataFrame(
+                spark.sparkContext.emptyRDD(), T.StructType(fields)
+            )
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)
@@ -1022,17 +1071,19 @@ class LakeTable:
     def bucket_of(
         self, spark: SparkSession, conv_id: str, n_buckets: int | None = None
     ) -> int:
-        """Bucket id of one conversation, via the same xxhash64 expression
-        the write path uses (one row-local job; on a real cluster this is
-        the partition-spec transform evaluated driver-side). Pass the
-        TARGET manifest's n_buckets when resolving against a pinned
-        version — the layout may have been rebucketed since."""
-        row = (
-            spark.createDataFrame([(conv_id,)], "conv_id string")
-            .select(self.bucket_expr(n_buckets=n_buckets))
-            .first()
-        )
-        return int(row[0])
+        """Bucket id of one conversation: ``bucket_expr`` (pmod of Spark's
+        xxhash64) evaluated on the driver, so planning submits no Spark
+        job. Pass the TARGET manifest's n_buckets when resolving against a
+        pinned version — the layout may have been rebucketed since. Raises
+        TypeError for a non-``str`` key (the write path never stores a
+        null conv_id, so no bucket can hold one). ``spark`` is unused and
+        kept for callers."""
+        if not isinstance(conv_id, str):
+            raise TypeError(
+                f"conv_id must be str, not {type(conv_id).__name__}"
+            )
+        n = self.n_buckets if n_buckets is None else n_buckets
+        return self._xxh64(conv_id.encode("utf-8")) % n  # % n == pmod, n > 0
 
     def plan_point_lookup(
         self,
@@ -1044,11 +1095,13 @@ class LakeTable:
         """File-skipping plan for a single-conversation read: prune to the
         key's hash bucket, then drop every file in that bucket whose
         conv_id [min, max] range excludes the key (files without stats are
-        kept — never wrong, just unpruned). Returns the plan so callers and
-        tests can assert the scan set: {bucket, files, files_in_bucket,
-        files_total}. Pass ``m`` to plan against an already-loaded manifest
-        (point_read does — the plan and the read must see ONE snapshot,
-        not two pointer reads racing a concurrent commit)."""
+        kept — never wrong, just unpruned). Planning runs on the driver
+        from manifest metadata alone and submits no Spark job. Returns the
+        plan so callers and tests can assert the scan set: {bucket, files,
+        files_in_bucket, files_total}. Pass ``m`` to plan against an
+        already-loaded manifest (point_read does — the plan and the read
+        must see ONE snapshot, not two pointer reads racing a concurrent
+        commit)."""
         if m is None:
             m = self.manifest(version)
         b = self.bucket_of(spark, conv_id, n_buckets=m.n_buckets)

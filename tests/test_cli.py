@@ -7,6 +7,7 @@ import os
 import pytest
 
 from etl_spark.__main__ import main
+from etl_spark.lake.table import LakeTable
 
 
 def _run(capsys, *argv) -> str:
@@ -47,6 +48,20 @@ def test_cli_end_to_end(spark, tmpdir_path, capsys):
 
     out = _run(capsys, "metrics", "--table", lake)
     assert "events_in" in out
+
+    # lookup: bucket and turns of one conversation, planned and read from
+    # one snapshot
+    t = LakeTable(lake)
+    cid = t.read(spark).orderBy("conv_id").first()["conv_id"]
+    got = _last_json(_run(capsys, "lookup", "--table", lake, "--conv", cid))
+    assert got["conv_id"] == cid
+    assert got["bucket"] == t.bucket_of(spark, cid)
+    want = t.point_read(spark, cid).orderBy("turn_idx").collect()
+    assert want
+    assert got["turns"] == [
+        {"turn_idx": r["turn_idx"], "role": r["role"], "text": r["text"]}
+        for r in want
+    ]
 
 
 def test_cli_query_and_errors(spark, capsys):

@@ -54,6 +54,13 @@ def test_point_lookup_skips_disjoint_files(spark, tmpdir_path):
     assert plan["files"][0]["stats"]["conv_min"] <= "b001" <= plan["files"][0]["stats"]["conv_max"]
     got = t.point_read(spark, "b001").collect()
     assert len(got) == 1 and got[0]["text"] == "t-b1"
+    # an absent key between the ranges prunes every file of its bucket:
+    # the empty scan still has read()'s schema
+    plan = t.plan_point_lookup(spark, "b999")
+    assert plan["files_in_bucket"] == 3 and plan["files"] == []
+    empty = t.point_read(spark, "b999")
+    assert empty.collect() == []
+    assert empty.schema == t.read(spark).schema
 
 
 def test_point_read_equals_filtered_full_read(spark, tmpdir_path):
