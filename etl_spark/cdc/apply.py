@@ -25,6 +25,7 @@ import hashlib
 import os
 import uuid
 from datetime import datetime, timedelta
+from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
@@ -38,7 +39,7 @@ __all__ = [
     "apply_batch",
     "batch_fingerprint",
     "check_segment_immutability",
-    "feed_files_nonempty",
+    "plan_trigger",
     "replay_feed",
     "requeue_quarantine",
     "validate_events",
@@ -95,88 +96,104 @@ def _segment_relative(path: str) -> str:
     return "/".join(parts[-2:])
 
 
-def new_files_predicate(
-    rel_new: list[str],
-    feed_dir: str | None = None,
-    rel_applied: list[str] | None = None,
-) -> F.Column:
-    """Predicate over the ``__file`` column (``input_file_name()``)
-    matching rows that came from the given segment-relative new files.
-
-    Matching happens on BOTH the raw segment-relative tail and its
-    url-decoded form, against a want-set that includes every file's raw,
-    percent-decoded (``unquote``) AND form-decoded (``unquote_plus``)
-    identity — because the two sides can disagree on URI encoding
-    (``inputFiles()`` vs ``input_file_name()``), and Spark's only decode
-    builtin (``url_decode``) is FORM decoding, which turns a literal
-    ``+`` in a file name into a space while Python's ``unquote`` keeps
-    it. A one-sided normalization silently drops such a file's rows
-    while the ledger marks it applied (the round-4 review's '+' case);
-    the symmetric variant set matches whichever encoding each side
-    chose. Shared by run_stream and route_stream — one copy to fix.
-
-    The variant union can OVER-match when form decoding collides two
-    distinct sibling files ('a+b.parquet' form-decodes to the same
-    identity as 'a b.parquet'). Two guards narrow it:
-
-      * ``feed_dir``: each side is resolved EXACT-MATCH-FIRST against
-        the on-disk listing (the ground truth for which decode the
-        encoder chose): the raw name wins if it exists, decoded
-        variants are consulted only when it does not, and the variant
-        union is kept wholesale only when nothing resolves (remote
-        URIs).
-      * ``rel_applied``: resolved identities of the trigger's OTHER
-        (already-applied) files are excluded, so an applied sibling
-        whose form-decoded identity lands in the want-set cannot
-        re-enter the batch (its rows were already merged; re-admitting
-        them skews counters and fingerprint-derived work).
-
-    Residual accepted ambiguity: when BOTH siblings exist on disk and a
-    side form-encoded a space into '+' (real encoders percent-encode),
-    exact-match-first picks the wrong sibling — unresolvable from
-    strings; key-level LWW dedup bounds the blast radius to counter
-    skew."""
-    from urllib.parse import unquote, unquote_plus
-
-    def resolve(r: str) -> set[str]:
-        cands = [r, unquote(r), unquote_plus(r)]
-        if feed_dir is not None:
-            for c in cands:
-                if os.path.exists(os.path.join(feed_dir, c)):
-                    return {c}
-        return set(cands)
-
-    want: set[str] = set()
-    for r in rel_new:
-        want |= resolve(r)
-    w = sorted(want)
-    rel_raw = F.array_join(F.slice(F.split(F.col("__file"), "/"), -2, 2), "/")
-    rel_dec = F.coalesce(F.try_url_decode(rel_raw), rel_raw)
-    pred = rel_raw.isin(w) | rel_dec.isin(w)
-    excl: set[str] = set()
-    for r in rel_applied or ():
-        excl |= resolve(r)
-    excl -= want
-    if excl:
-        pred = pred & ~rel_raw.isin(sorted(excl))
-    return pred
+def _file_identity(uri: str) -> str:
+    """The one file identity of the ledger: ``<segment>/<file>`` exactly
+    as named on disk — what ``replay_feed`` fingerprints and
+    ``segment_listing`` lists. ``input_file_name()`` yields a URI string
+    (space → ``%20``, ``%`` → ``%25``; ``+`` and non-ASCII stay literal),
+    and ``unquote`` of its segment-relative tail gives back the on-disk
+    name."""
+    return unquote(_segment_relative(uri))
 
 
 def segment_listing(feed_dir: str, sname: str) -> set[str]:
-    """Current on-disk parquet file set of a feed segment, in the decoded
-    segment-relative identity used for fingerprints. Shared by the
-    streaming drivers' completion bookkeeping."""
-    from urllib.parse import unquote
-
-    d = os.path.join(feed_dir, unquote(sname))
+    """Current on-disk parquet file set of a feed segment, as
+    ``<segment>/<file>`` file identities."""
     try:
         return {
-            f"{unquote(sname)}/{fn}"
-            for fn in os.listdir(d)
+            f"{sname}/{fn}"
+            for fn in os.listdir(os.path.join(feed_dir, sname))
             if fn.endswith(".parquet")
         }
     except OSError:
         return set()
+
+
+def _zero_row_file(path: str) -> bool:
+    """Driver-side parquet footer probe: True only when the footer says
+    0 rows (an unreadable file counts as holding rows)."""
+    import pyarrow.parquet as pq
+
+    try:
+        return pq.read_metadata(path).num_rows == 0
+    except (OSError, ValueError):  # missing, or not (yet) valid parquet
+        return False
+
+
+def plan_trigger(
+    df: DataFrame, feed_dir: str, tables: list[LakeTable]
+) -> tuple[str, list[str], dict[str, str], DataFrame] | None:
+    """Plan one streaming micro-batch against the ledgers of the tables
+    the stream owns — the single trigger path of ``run_stream`` and
+    ``route_stream``.
+
+    ``df`` carries each row's source file URI in ``__file``. One job
+    collects the distinct values; each maps to its ``_file_identity``,
+    and the ledger filter, completion fingerprints and immutability check
+    use only that identity. A file is new unless EVERY table has applied
+    it (its segment completed, or its per-file entry recorded). Rows are
+    selected by exact match on the collected ``__file`` strings, so each
+    planned file contributes its own rows and a batch with new files is
+    never empty.
+
+    Idempotence is per INPUT FILE: maxFilesPerTrigger can split one
+    segment's files across triggers, and after checkpoint loss Spark
+    re-delivers old files grouped differently — the per-file ledger
+    no-ops them regardless of grouping. A segment completes (moves to
+    the compact per-segment map under its listing fingerprint, pruning
+    its per-file entries) once every listed file is applied in every
+    table. A zero-row parquet file yields no ``__file`` row, so a listed
+    file not yet applied counts as applied when its footer says 0 rows;
+    the probe runs only for such files, never on whole-segment triggers.
+
+    Returns ``(batch_id, new file identities, completed segments →
+    fingerprint, batch rows without __file)``, or None when nothing is
+    new."""
+    uris = {r[0]: _file_identity(r[0])
+            for r in df.select("__file").distinct().collect()}
+    if not uris:
+        return None
+    ledgers = [
+        (t, t.committed_segments(), t.committed_inputs()) for t in tables
+    ]
+    # refuse a file appended to a COMPLETED segment before the membership
+    # filter below can silently drop it
+    check_segment_immutability(
+        feed_dir,
+        [rel.split("/")[0] for rel in uris.values()],
+        [(t, segs) for t, segs, _ in ledgers],
+    )
+
+    def applied(rel: str) -> bool:
+        seg = rel.split("/")[0]
+        return all(seg in segs or rel in inps for _t, segs, inps in ledgers)
+
+    new_uris = sorted(u for u, rel in uris.items() if not applied(rel))
+    if not new_uris:
+        return None
+    rel_new = sorted({uris[u] for u in new_uris})
+    # completion against the LEAST advanced ledger
+    done = set.intersection(*(inps for _t, _s, inps in ledgers)) | set(rel_new)
+    complete: dict[str, str] = {}
+    for sname in sorted({rel.split("/")[0] for rel in rel_new}):
+        listed = segment_listing(feed_dir, sname)
+        if listed and all(
+            f in done or _zero_row_file(os.path.join(feed_dir, f))
+            for f in sorted(listed)
+        ):
+            complete[sname] = batch_fingerprint(sorted(listed))
+    batch_df = df.filter(F.col("__file").isin(new_uris)).drop("__file")
+    return batch_fingerprint(rel_new), rel_new, complete, batch_df
 
 
 def check_segment_immutability(
@@ -206,11 +223,7 @@ def check_segment_immutability(
     semantics they were written under instead of bricking the stream.
     (Without the style marker, a single-trigger completion's batch id
     ALWAYS equals the listing fingerprint, so the legacy probe would
-    silently skip every mutated common-case segment.)
-
-    Shared by ``run_stream`` and ``route_stream`` (one copy to fix —
-    the round-4 review found run_stream silently dropping appended
-    files its sibling had learned to refuse)."""
+    silently skip every mutated common-case segment.)"""
     for sname in sorted(set(seg_names)):
         cur_fp: str | None = None
         listed = False
@@ -232,38 +245,6 @@ def check_segment_immutability(
                 f"file landed in (or vanished from) a completed segment; "
                 f"segments are immutable by contract"
             )
-
-
-def feed_files_nonempty(feed_dir: str, rel_files: list[str]) -> bool:
-    """Driver-side parquet-footer probe: does ANY of the given
-    segment-relative feed files contain at least one row?
-
-    Used only on the ZERO-ROW failure path of the streaming drivers'
-    expect-rows guard (never per trigger): a producer may legitimately
-    write a zero-row parquet file (an empty partition), and raising on
-    it pre-commit would crash the stream into a permanent redelivery
-    loop with no operator escape. If every matched file's footer says 0
-    rows, the batch genuinely is empty — commit/ledger it as such. An
-    unreadable or unresolvable file counts as non-empty so the loud
-    guard stays armed."""
-    import pyarrow.parquet as pq
-    from urllib.parse import unquote, unquote_plus
-
-    for rel in rel_files:
-        p = None
-        for cand in (rel, unquote(rel), unquote_plus(rel)):
-            fp = os.path.join(feed_dir, cand)
-            if os.path.exists(fp):
-                p = fp
-                break
-        if p is None:
-            return True
-        try:
-            if pq.read_metadata(p).num_rows > 0:
-                return True
-        except Exception:
-            return True
-    return False
 
 
 def batch_fingerprint(source_files: list[str]) -> str:
@@ -413,7 +394,6 @@ def apply_batch(
     mode: str = "cow",
     allow_patches: bool = False,
     quarantine_dir: str | None = None,
-    expect_rows=False,  # bool or () -> bool (zero-row path only)
 ) -> MergeStats:
     """Validate + (optionally) drop too-late events + dedup + MERGE.
 
@@ -544,7 +524,6 @@ def apply_batch(
         mode=mode,
         allow_patches=allow_patches,
         patch_probe=patch_probe,
-        expect_rows=expect_rows,
     )
     if cons["warn"]:
         c = resilient.get  # filled by the merge's pass-1/write job

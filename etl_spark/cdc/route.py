@@ -237,8 +237,9 @@ def route_stream(
 ):
     """Structured-Streaming tail of a MULTI-TABLE change feed: the real
     binlog deployment shape — one checkpointed stream, events interleaved
-    across every table of the source database, each trigger routed through
-    ``route_batch``.
+    across every table of the source database, each trigger planned by
+    the same ``plan_trigger`` as ``run_stream`` (one file identity, one
+    ledger filter) and routed through ``route_batch``.
 
     ``idents`` is the explicit include-list of catalog tables this
     consumer owns (the Debezium table-include-list), ENFORCED: a route
@@ -262,104 +263,16 @@ def route_stream(
     different content raises ``SegmentReuseError`` instead of being
     silently skipped or double-applied.
     """
-    from pyspark.sql import functions as _F
+    from etl_spark.cdc.apply import plan_trigger
+    from etl_spark.cdc.stream import _start_feed_stream
 
-    from etl_spark.cdc.apply import _segment_relative, batch_fingerprint
-    from etl_spark.cdc.stream import detect_feed_schema
-
-    tables = {i: catalog.load_table(i) for i in idents}
-    schema = detect_feed_schema(spark, feed_dir)
-    if table_col not in schema.fieldNames():
-        raise ValueError(f"feed lacks the route column {table_col!r}")
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    src = reader.parquet(f"{feed_dir}/*").withColumn(
-        "__file", _F.input_file_name()
-    )
-
-    from urllib.parse import unquote
-
-    from etl_spark.cdc.apply import (
-        check_segment_immutability,
-        feed_files_nonempty,
-        new_files_predicate,
-        segment_listing,
-    )
-
-    def _segment_listing(sname: str) -> set[str]:
-        return segment_listing(feed_dir, sname)
+    tables = [catalog.load_table(i) for i in idents]
 
     def _apply(df: DataFrame, epoch_id: int) -> None:
-        files = list(df.inputFiles())
-        if not files:
-            files = [r[0] for r in df.select("__file").distinct().collect()]
-        if not files:
+        plan = plan_trigger(df, feed_dir, tables)
+        if plan is None:
             return
-        done = [
-            (t, t.committed_segments(), t.committed_inputs())
-            for t in tables.values()
-        ]
-
-        # A segment ledgered complete is immutable by contract: refuse a
-        # file appended to one (shared helper, with the legacy batch-id
-        # fallback — see check_segment_immutability). Reuses the ledger
-        # snapshots materialized above: no extra manifest I/O per table.
-        trigger_segs = sorted({_segment_relative(f).split("/")[0] for f in files})
-        check_segment_immutability(
-            feed_dir, trigger_segs, [(t, segs) for t, segs, _inps in done]
-        )
-
-        def applied_everywhere(f: str) -> bool:
-            rel = _segment_relative(f)
-            seg = rel.split("/")[0]
-            return all(seg in segs or rel in inps for _t, segs, inps in done)
-
-        new_files = sorted(f for f in files if not applied_everywhere(f))
-        if not new_files:
-            return
-        bid = batch_fingerprint(new_files)
-        rel_new = [_segment_relative(f) for f in new_files]
-        # segment completion (run_stream's bookkeeping, against the LEAST
-        # advanced ledger): once every file of a segment is applied in all
-        # routed tables, the segment moves to the compact per-segment
-        # fingerprint map and its per-file entries are pruned — bounding
-        # ledger growth over an endless stream
-        common_inputs = (
-            set.intersection(*(inps for _t, _segs, inps in done))
-            if done
-            else set()
-        )
-        applied_decoded = {unquote(x) for x in (common_inputs | set(rel_new))}
-        complete: dict[str, str] = {}
-        for sname in sorted({r.split("/")[0] for r in rel_new}):
-            allf = _segment_listing(sname)
-            if allf and allf <= applied_decoded:
-                complete[sname] = batch_fingerprint(sorted(allf))
-        # symmetric normalized identity matching (shared helper — see
-        # cdc/apply.new_files_predicate for the encoding-drift contract);
-        # already-applied sibling files are excluded so a form-decode
-        # collision cannot re-admit their rows
-        new_set = set(new_files)
-        rel_applied = [_segment_relative(f) for f in files if f not in new_set]
-        batch_df = df.filter(
-            new_files_predicate(rel_new, feed_dir=feed_dir, rel_applied=rel_applied)
-        ).drop("__file")
-        if batch_df.isEmpty() and not df.isEmpty():
-            # rows exist in the trigger but none matched the new files —
-            # either the identity normalization above missed (fail loudly
-            # instead of ledgering unapplied files), or the new files are
-            # legitimately EMPTY parquet (an empty producer partition —
-            # footer-probed driver-side, only on this already-failed
-            # path); the latter proceeds to ledger them as applied with
-            # a counters-only commit per routed table.
-            if feed_files_nonempty(feed_dir, rel_new):
-                raise RuntimeError(
-                    f"route_stream: trigger matched 0 rows for "
-                    f"{len(rel_new)} new files ({rel_new[:3]}…) — "
-                    f"file-identity normalization mismatch between "
-                    f"inputFiles() and input_file_name()"
-                )
+        bid, rel_new, complete, batch_df = plan
         route_batch(
             spark, catalog, batch_df, bid, table_col=table_col,
             transactional=transactional, on_unknown=on_unknown, mode=mode,
@@ -368,11 +281,9 @@ def route_stream(
             **apply_kwargs,
         )
 
-    writer = src.writeStream.foreachBatch(_apply).option(
-        "checkpointLocation", checkpoint_dir
+    q = _start_feed_stream(
+        spark, feed_dir, checkpoint_dir, _apply,
+        max_files_per_trigger=max_files_per_trigger,
+        available_now=available_now, required_col=table_col,
     )
-    if available_now:
-        q = writer.trigger(availableNow=True).start()
-        q.awaitTermination()
-        return None
-    return writer.start()
+    return None if available_now else q

@@ -36,15 +36,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
-from etl_spark.cdc.apply import (
-    _segment_relative,
-    apply_batch,
-    batch_fingerprint,
-    check_segment_immutability,
-    feed_files_nonempty,
-    new_files_predicate,
-    segment_listing,
-)
+from etl_spark.cdc.apply import apply_batch, plan_trigger
 from etl_spark.lake.table import LakeTable
 
 # Default per-bucket data-file bound for the streaming loop. A MOR
@@ -65,6 +57,41 @@ def detect_feed_schema(spark: SparkSession, feed_dir: str) -> T.StructType:
         .parquet(f"{feed_dir}/*")
         .schema
     )
+
+
+def _start_feed_stream(
+    spark: SparkSession,
+    feed_dir: str,
+    checkpoint_dir: str,
+    on_batch,
+    max_files_per_trigger: int | None = None,
+    available_now: bool = True,
+    required_col: str | None = None,
+):
+    """Read/write setup shared by both streaming drivers: tail the feed's
+    segment dirs with the union-of-eras schema, tag each row with its
+    source file URI in ``__file`` (what ``plan_trigger`` discovers files
+    from), and call ``on_batch(df, epoch_id)`` per micro-batch under
+    ``checkpoint_dir``. With ``available_now`` the call drains the feed
+    and returns the terminated query; otherwise it returns the running
+    query (caller stops it)."""
+    schema = detect_feed_schema(spark, feed_dir)
+    if required_col is not None and required_col not in schema.fieldNames():
+        raise ValueError(f"feed lacks the route column {required_col!r}")
+    reader = spark.readStream.schema(schema)
+    if max_files_per_trigger is not None:
+        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
+    writer = (
+        reader.parquet(f"{feed_dir}/*")
+        .withColumn("__file", F.input_file_name())
+        .writeStream.foreachBatch(on_batch)
+        .option("checkpointLocation", checkpoint_dir)
+    )
+    if not available_now:
+        return writer.start()
+    q = writer.trigger(availableNow=True).start()
+    q.awaitTermination()
+    return q
 
 
 def _neardup_gate(
@@ -414,12 +441,6 @@ def run_stream(
     append halved drain throughput). An availableNow drain ends with a
     final fold so the table is current. None (default) opts out at zero
     drain cost."""
-    schema = detect_feed_schema(spark, feed_dir)
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    src = reader.parquet(f"{feed_dir}/*").withColumn("__file", F.input_file_name())
-
     prog_dir = progress_path
     if prog_dir is None and checkpoint_dir is not None:
         import os as _os
@@ -489,75 +510,11 @@ def run_stream(
                 )
             sync_replica(spark, table, rt, mode=mode)
 
-    def _apply_new_files(df: DataFrame) -> None:
-        import os
-
-        # file discovery is plan metadata — no job, no scan of the batch.
-        # (The previous select(__file).distinct().collect() materialized
-        # every row of every trigger just to enumerate its inputs.)
-        files = list(df.inputFiles())
-        if not files:
-            # defensive fallback for sources that don't expose inputFiles
-            files = [r[0] for r in df.select("__file").distinct().collect()]
-        if not files:
-            return
-        # Idempotence is per INPUT FILE: maxFilesPerTrigger can split one
-        # segment's files across triggers, so marking a whole segment done
-        # on its first partial delivery would silently drop the rest (the
-        # round-1 bug, masked by a feed writer that happened to emit fewer
-        # files per segment than the trigger size). After checkpoint loss,
-        # Spark re-delivers old files grouped differently — the per-file
-        # ledger no-ops them regardless of grouping. A segment moves to the
-        # compact per-segment map (and its file entries are pruned) only
-        # once EVERY file in its directory has been applied. Segments are
-        # immutable by contract (like the reference's archives).
-        def seg(f: str) -> str:
-            return _segment_relative(f).split("/")[0]
-
-        done_segs = table.committed_segments()
-        done_inputs = table.committed_inputs()
-        # refuse a file appended to a COMPLETED segment before the
-        # name-membership skip below can silently drop it (shared with
-        # route_stream — listing vs completion fingerprint, with the
-        # legacy batch-id fallback; see the helper's docstring)
-        check_segment_immutability(
-            feed_dir, [seg(f) for f in files], [(table, done_segs)]
-        )
-
-        def applied(f: str) -> bool:
-            return seg(f) in done_segs or _segment_relative(f) in done_inputs
-
-        new_files = sorted(f for f in files if not applied(f))
-        if not new_files:
-            return
-        rel_new = [_segment_relative(f) for f in new_files]
-        applied_after = done_inputs | set(rel_new)
-        # the ledger stores URI-style names (input_file_name/inputFiles may
-        # percent-encode); the directory listing is raw — decode the ledger
-        # side for the completion comparison or a file with an encodable
-        # character in its name would keep its segment "incomplete" forever
-        from urllib.parse import unquote
-
-        applied_decoded = {unquote(x) for x in applied_after}
-        # a COMPLETED segment is ledgered under its content fingerprint
-        # (all its files), so a later batch replay of the same feed proves
-        # same-name-same-content and skips — while a reused segment name
-        # with different content is refused instead of silently dropped
-        complete_segs: dict[str, str] = {}
-        for sname in sorted({seg(f) for f in new_files}):
-            allf = segment_listing(feed_dir, sname)
-            if allf and allf <= applied_decoded:
-                complete_segs[sname] = batch_fingerprint(sorted(allf))
-        bid = batch_fingerprint(new_files)
-        # symmetric normalized identity matching (shared helper — see
-        # new_files_predicate for the encoding-drift contract); already-
-        # applied sibling files are excluded so a form-decode collision
-        # cannot re-admit their rows
-        new_set = set(new_files)
-        rel_applied = [_segment_relative(f) for f in files if f not in new_set]
-        batch_df = df.filter(
-            new_files_predicate(rel_new, feed_dir=feed_dir, rel_applied=rel_applied)
-        ).drop("__file")
+    def _apply_new_files(df: DataFrame):
+        plan = plan_trigger(df, feed_dir, [table])
+        if plan is None:
+            return None
+        bid, rel_new, complete_segs, batch_df = plan
         if neardup_index_path is not None:
             batch_df = _neardup_gate(
                 spark, batch_df, neardup_index_path, neardup_threshold, bid
@@ -567,7 +524,7 @@ def run_stream(
             table,
             batch_df,
             bid,
-            source_files=sorted({seg(f) for f in new_files}),
+            source_files=sorted({r.split("/")[0] for r in rel_new}),
             fail_threshold=fail_threshold,
             segments=complete_segs,
             input_files=rel_new,
@@ -575,23 +532,6 @@ def run_stream(
             mode=mode,
             allow_patches=allow_patches,
             quarantine_dir=quarantine_dir,
-            # a zero-row scan for new files usually means the row↔file
-            # matching above silently missed — the merge gate raises
-            # PRE-COMMIT instead of ledgering unapplied files (free: the
-            # check rides the counters the merge materializes anyway).
-            # The CALLABLE form is evaluated only on that zero-row path:
-            # it probes the matched files' parquet footers, so a
-            # producer's legitimately-empty file (an empty partition)
-            # commits as a counters-only version instead of crashing the
-            # stream into a permanent redelivery loop. NOT asserted when
-            # the near-dup gate is on: the gate can legitimately empty a
-            # batch (a trigger that is 100% cross-key duplicates of
-            # admitted content — the exact flood it exists to drop).
-            expect_rows=(
-                (lambda: feed_files_nonempty(feed_dir, rel_new))
-                if neardup_index_path is None
-                else False
-            ),
         )
 
     def _apply_and_compact(df: DataFrame):
@@ -600,18 +540,16 @@ def run_stream(
             table.compact_small_files(spark, auto_compact_files)
         return s
 
-    writer = (
-        src.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint_dir)
+    q = _start_feed_stream(
+        spark, feed_dir, checkpoint_dir, _apply,
+        max_files_per_trigger=max_files_per_trigger,
+        available_now=available_now,
     )
     if available_now:
-        q = writer.trigger(availableNow=True).start()
-        q.awaitTermination()
         if mv_path is not None:
             from etl_spark.lake.mv import ConvSummaryMV
 
             ConvSummaryMV(mv_path).refresh(spark, table)
         if progress_fold_every is not None and prog_dir is not None:
             fold_progress(spark, prog_dir)  # drained table is current
-        return q
-    return writer.start()
+    return q

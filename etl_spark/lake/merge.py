@@ -173,31 +173,6 @@ def _finalize_stats_record(
     }
 
 
-
-def _require_expected_rows(
-    batch_id: str, events_in: int, expect_rows
-) -> None:
-    """Loud pre-commit guard for streaming callers: the caller matched
-    specific NON-EMPTY input files to this batch, so a zero-row scan means
-    the row↔file identity matching silently failed — committing the
-    counters-only version would ledger the files as applied without their
-    rows (permanent data loss). Raising here costs nothing (the counters
-    were already materialized) and nothing has been committed.
-
-    ``expect_rows`` may be a CALLABLE ``() -> bool`` evaluated only on
-    the zero-row path: streaming callers pass a parquet-footer probe of
-    the matched files, so a producer's legitimately-empty file commits
-    as a counters-only version instead of crashing the stream into a
-    permanent redelivery loop — at zero cost to non-empty batches."""
-    if expect_rows and events_in == 0:
-        if callable(expect_rows) and not expect_rows():
-            return  # matched files are genuinely empty: commit as empty
-        raise BatchFailedError(
-            f"batch {batch_id}: caller expected rows (non-empty input "
-            f"files) but the scan saw 0 — file-identity matching "
-            f"mismatch; nothing committed"
-        )
-
 def _fused_scan_gate(
     spark: SparkSession,
     table: LakeTable,
@@ -211,7 +186,6 @@ def _fused_scan_gate(
     base_version: int,
     t0: float,
     rebuild_missing: bool = True,
-    expect_rows=False,  # bool or () -> bool (zero-row path only)
 ) -> dict[str, Any] | None:
     """Pass 1 shared by the copy-on-write and patch merges: load (or
     rebuild once) the Bloom seen-set, run the fused membership/bucket scan
@@ -280,7 +254,6 @@ def _fused_scan_gate(
             f"batch {batch_id}: {failed}/{events_in} failed rows exceeds "
             f"{fail_threshold:.0%} budget — aborting before commit"
         )
-    _require_expected_rows(batch_id, events_in, expect_rows)
     if events_in == 0 or events_in == failed + late_dropped:
         # nothing to merge; still commit (advances watermark + segments).
         # A just-rebuilt seen-set is persisted even on this path —
@@ -320,7 +293,6 @@ def merge_into(
     allow_patches: bool = False,
     conflict_retries: int = 2,
     patch_probe: DataFrame | None = None,
-    expect_rows=False,  # bool or () -> bool (zero-row path only)
 ) -> MergeStats:
     """Apply one validated CDC batch, surviving concurrent writers.
 
@@ -349,7 +321,6 @@ def merge_into(
                 fail_threshold=fail_threshold, source_files=source_files,
                 segments=segments, input_files=input_files, mode=mode,
                 allow_patches=allow_patches, patch_probe=patch_probe,
-                expect_rows=expect_rows,
             )
         except CommitConflictError as e:
             last = e
@@ -369,7 +340,6 @@ def _merge_into_once(
     mode: str = "cow",
     allow_patches: bool = False,
     patch_probe: DataFrame | None = None,
-    expect_rows=False,  # bool or () -> bool (zero-row path only)
 ) -> MergeStats:
     """Apply one validated (but not yet deduped) CDC batch to ``table``.
 
@@ -478,7 +448,7 @@ def _merge_into_once(
             new_sid=new_sid, payload_cols=payload_cols,
             storage_schema=storage_schema, storage_cols=storage_cols,
             t0=t0, base_version=base_version, mode=mode,
-            patch_probe=patch_probe, expect_rows=expect_rows,
+            patch_probe=patch_probe,
         )
 
     if mode == "mor":
@@ -487,7 +457,6 @@ def _merge_into_once(
             fail_threshold=fail_threshold, source_files=source_files,
             segments=segments, input_files=input_files, evolved=evolved,
             new_sid=new_sid, t0=t0, base_version=base_version,
-            expect_rows=expect_rows,
         )
 
     # ---- pass 1 (cow): fused scan — bloom membership + batch bloom +
@@ -495,7 +464,7 @@ def _merge_into_once(
     #      same job ----
     gate = _fused_scan_gate(
         spark, table, batch, batch_id, stats, counters, fail_threshold,
-        segments, input_files, base_version, t0, expect_rows=expect_rows,
+        segments, input_files, base_version, t0,
     )
     if gate is None:
         return stats
@@ -626,7 +595,6 @@ def _merge_mor_fused(
     new_sid: str,
     t0: float,
     base_version: int,
-    expect_rows=False,  # bool or () -> bool (zero-row path only)
 ) -> MergeStats:
     """Merge-on-read in ONE distributed pass (see module docstring).
 
@@ -669,7 +637,6 @@ def _merge_mor_fused(
             f"batch {batch_id}: {failed}/{events_in} failed rows exceeds "
             f"{fail_threshold:.0%} budget — aborting before commit"
         )
-    _require_expected_rows(batch_id, events_in, expect_rows)
     if events_in == 0 or events_in == failed + late_dropped:
         table.commit_version(
             {}, [], batch_id,
@@ -726,7 +693,6 @@ def _merge_patch(
     base_version: int,
     mode: str,
     patch_probe: DataFrame | None = None,
-    expect_rows=False,  # bool or () -> bool (zero-row path only)
 ) -> MergeStats:
     """Patch-aware merge: per-column LWW over (batch events ∪ committed
     rows of the touched buckets as VIRTUAL events) in one aggregation
@@ -799,7 +765,7 @@ def _merge_patch(
 
         gate = _fused_scan_gate(
             spark, table, batch, batch_id, stats, counters, fail_threshold,
-            segments, input_files, base_version, t0, expect_rows=expect_rows,
+            segments, input_files, base_version, t0,
         )
         if gate is None:
             return stats
@@ -960,7 +926,6 @@ def _merge_patch(
                 f"batch {batch_id}: {failed}/{events_in} failed rows exceeds "
                 f"{fail_threshold:.0%} budget — aborting before commit"
             )
-        _require_expected_rows(batch_id, events_in, expect_rows)
         if events_in == 0 or events_in == failed + late_dropped:
             # nothing to merge; still commit (advances watermark + segments)
             table.commit_version(

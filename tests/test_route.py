@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import datetime as dt
 import os
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
@@ -198,11 +199,15 @@ def test_segment_name_reuse_across_feeds_is_refused(spark, cat, tmpdir_path):
 
 def test_replay_then_stream_interop_no_reapply(spark, cat, tmpdir_path):
     """A feed applied by batch replay is recognized as applied by a
-    subsequent streaming tail of the same directory (shared ledger)."""
+    subsequent streaming tail of the same directory (shared ledger) —
+    also for a segment whose name changes under URI encoding."""
     from etl_spark.cdc.route import route_stream
 
     feed_dir = os.path.join(tmpdir_path, "feed")
     write_feed(_tagged(spark, 4000, seed=41), feed_dir)
+    os.rename(
+        os.path.join(feed_dir, "batch=00001"), os.path.join(feed_dir, "seg one")
+    )
     replay_feed_routed(spark, cat, feed_dir)
     v = {i: cat.load_table(i).current_version() for i in ("raw.chat", "raw.agent")}
     route_stream(
@@ -213,6 +218,10 @@ def test_replay_then_stream_interop_no_reapply(spark, cat, tmpdir_path):
     assert v == {
         i: cat.load_table(i).current_version() for i in ("raw.chat", "raw.agent")
     }
+    for i in ("raw.chat", "raw.agent"):
+        t = cat.load_table(i)
+        assert sorted(t.committed_segments()) == ["batch=00000", "seg one"]
+        assert t.committed_inputs() == set()
 
 
 def test_include_list_is_enforced(spark, cat, tmpdir_path):
@@ -279,3 +288,45 @@ def test_file_landing_in_completed_segment_raises(spark, cat, tmpdir_path):
             spark, cat, feed_dir, os.path.join(tmpdir_path, "mck2"),
             ["raw.chat", "raw.agent"],
         )
+
+
+def test_zero_row_file_completes_its_segment(spark, cat, tmpdir_path):
+    """A zero-row parquet file beside real files never appears in a
+    trigger's rows; route_stream must still complete its segment in every
+    owned table (name ledgered, per-file entries pruned)."""
+    from etl_spark.cdc.route import route_stream
+    from tests.test_stream import _add_zero_row_file
+
+    feed_dir = os.path.join(tmpdir_path, "zfeed")
+    write_feed(_tagged(spark, 3000, seed=43), feed_dir)
+    _add_zero_row_file(os.path.join(feed_dir, "batch=00000"))
+    route_stream(
+        spark, cat, feed_dir, os.path.join(tmpdir_path, "zck"),
+        ["raw.chat", "raw.agent"], max_files_per_trigger=3,
+    )
+    for i in ("raw.chat", "raw.agent"):
+        t = cat.load_table(i)
+        assert sorted(t.committed_segments()) == ["batch=00000", "batch=00001"]
+        assert t.committed_inputs() == set()
+
+
+def test_file_landing_in_completed_encoded_segment_raises(spark, cat, tmpdir_path):
+    """The immutability refusal holds under the canonical file identity:
+    a segment named 'seg one' is ledgered complete under its on-disk name,
+    and a file landing in it afterwards is refused on the next drain of
+    the same checkpoint."""
+    from etl_spark.cdc.route import route_stream
+
+    feed_dir = os.path.join(tmpdir_path, "efeed")
+    write_feed(_tagged(spark, 3000, seed=47), feed_dir)
+    seg = os.path.join(feed_dir, "seg one")
+    os.rename(os.path.join(feed_dir, "batch=00000"), seg)
+    ck = os.path.join(tmpdir_path, "eck")
+    route_stream(spark, cat, feed_dir, ck, ["raw.chat", "raw.agent"])
+    for i in ("raw.chat", "raw.agent"):
+        assert "seg one" in cat.load_table(i).committed_segments()
+
+    src = [f for f in sorted(os.listdir(seg)) if f.endswith(".parquet")][0]
+    shutil.copy(os.path.join(seg, src), os.path.join(seg, "part-zzz-late.parquet"))
+    with pytest.raises(Exception, match="immutable"):
+        route_stream(spark, cat, feed_dir, ck, ["raw.chat", "raw.agent"])

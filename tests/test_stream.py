@@ -271,40 +271,81 @@ def test_zero_row_parquet_file_commits_as_empty(spark, tmpdir_path):
     assert table.manifest().version == v
 
 
-def test_new_files_predicate_applied_sibling_excluded(spark, tmpdir_path):
-    """Form decoding collides 'a+b.parquet' with 'a b.parquet'; rows of an
-    already-applied sibling must not re-enter the batch via the decoded
-    variant set (round-4 ADVICE, low)."""
+def _add_zero_row_file(seg_dir: str) -> None:
+    """Write a zero-row parquet file into a segment, schema cloned from
+    one of its real files' footer."""
+    import pyarrow.parquet as pq
+
+    src = [f for f in sorted(os.listdir(seg_dir)) if f.endswith(".parquet")][0]
+    sch = pq.read_schema(os.path.join(seg_dir, src))
+    pq.write_table(sch.empty_table(), os.path.join(seg_dir, "part-empty.parquet"))
+
+
+def test_replay_then_stream_encoded_segment_no_reapply(spark, tmpdir_path):
+    """A segment whose name changes under URI encoding ('seg one') is
+    ledgered by replay_feed under its on-disk name; a later run_stream of
+    the same feed must recognize it under the same identity — no new
+    version, one ledger entry per segment."""
+    from etl_spark.cdc.apply import replay_feed
+
+    feed = os.path.join(tmpdir_path, "efeed")
+    write_feed(change_feed_df(spark, **GEN), feed)
+    os.rename(os.path.join(feed, "batch=00001"), os.path.join(feed, "seg one"))
+    t = LakeTable.create(os.path.join(tmpdir_path, "elake"), TRANSCRIPT_SCHEMA, n_buckets=4)
+    replay_feed(spark, t, feed, mode="mor")
+    v = t.current_version()
+    run_stream(spark, t, feed, os.path.join(tmpdir_path, "eck"), mode="mor")
+    assert t.current_version() == v
+    assert sorted(t.committed_segments()) == sorted(os.listdir(feed))
+    assert t.committed_inputs() == set()
+
+
+def test_zero_row_file_completes_its_segment(spark, tmpdir_path):
+    """A zero-row parquet file beside real files yields no row, so no
+    trigger ever names it; the segment must still complete (footer says 0
+    rows): its name is ledgered and its per-file entries are pruned."""
+    feed = os.path.join(tmpdir_path, "zsfeed")
+    write_feed(
+        change_feed_df(spark, n_events=1500, n_convs=30, max_turns=6,
+                       seed=41, n_batches=2),
+        feed,
+    )
+    _add_zero_row_file(os.path.join(feed, sorted(os.listdir(feed))[0]))
+    t = LakeTable.create(os.path.join(tmpdir_path, "zslake"), TRANSCRIPT_SCHEMA, n_buckets=2)
+    run_stream(spark, t, feed, os.path.join(tmpdir_path, "zsck"),
+               max_files_per_trigger=3, mode="mor")
+    assert sorted(t.committed_segments()) == sorted(os.listdir(feed))
+    assert t.committed_inputs() == set()
+    _assert_state_equal(table_as_pandas(t.read(spark)), expected_final_state(feed))
+
+
+def test_both_siblings_apply_exactly_once(spark, tmpdir_path):
+    """'a+b.parquet' and 'a b.parquet' in one segment, one file per
+    trigger: when the second sibling arrives the first is already applied.
+    Each file's rows apply exactly once — summed events_in equals the
+    feed's row count — and the table equals the DuckDB LWW oracle."""
     from pyspark.sql import functions as F
 
-    from etl_spark.cdc.apply import new_files_predicate
+    from etl_spark.cdc.stream import progress_df
 
-    seg = os.path.join(tmpdir_path, "feedp", "s")
-    os.makedirs(seg)
-    for fn in ("a+b.parquet", "a b.parquet"):
-        open(os.path.join(seg, fn), "w").close()
-    df = spark.createDataFrame(
-        [("s/a+b.parquet", 1), ("s/a b.parquet", 2)], ["__file", "v"]
+    feed = os.path.join(tmpdir_path, "sibfeed")
+    write_feed(
+        change_feed_df(spark, n_events=2000, n_convs=40, max_turns=6,
+                       seed=17, n_batches=1),
+        feed,
     )
-    feed_dir = os.path.join(tmpdir_path, "feedp")
-
-    # want the space file; the '+' sibling was already applied — its rows
-    # must be excluded even though url_decode('a+b')=='a b' lands in want
-    got = df.filter(
-        new_files_predicate(
-            ["s/a b.parquet"], feed_dir=feed_dir,
-            rel_applied=["s/a+b.parquet"],
-        )
-    ).collect()
-    assert [r["v"] for r in got] == [2]
-    # and the wanted '+' file still matches itself (the round-4 fix held)
-    got2 = df.filter(
-        new_files_predicate(
-            ["s/a+b.parquet"], feed_dir=feed_dir,
-            rel_applied=["s/a b.parquet"],
-        )
-    ).collect()
-    assert [r["v"] for r in got2] == [1]
+    seg = os.path.join(feed, sorted(os.listdir(feed))[0])
+    parts = [f for f in sorted(os.listdir(seg)) if f.endswith(".parquet")]
+    os.rename(os.path.join(seg, parts[0]), os.path.join(seg, "a+b.parquet"))
+    os.rename(os.path.join(seg, parts[1]), os.path.join(seg, "a b.parquet"))
+    t = LakeTable.create(os.path.join(tmpdir_path, "siblake"), TRANSCRIPT_SCHEMA, n_buckets=2)
+    ck = os.path.join(tmpdir_path, "sibck")
+    run_stream(spark, t, feed, ck, max_files_per_trigger=1, mode="mor")
+    p = progress_df(spark, os.path.join(ck, "_progress"))
+    assert p.agg(F.sum("events_in")).first()[0] == \
+        spark.read.parquet(f"{feed}/*").count()
+    assert len(p.filter(~F.col("no_new_files")).collect()) == len(parts)
+    _assert_state_equal(table_as_pandas(t.read(spark)), expected_final_state(feed))
 
 
 def test_progress_df_dedup_by_batch_id(spark, tmpdir_path):
